@@ -497,16 +497,16 @@ def maybe_write_checkpoint(
 
 def overlaps(
     committed: "list[dict] | None",
-    ours: "list[dict] | None",
+    ours: list[dict],
     partition_cols: list[str],
 ) -> bool:
-    """Partition-level conflict predicate: None = whole table."""
+    """Partition-level conflict predicate: `committed` None = an
+    intervening commit touched the whole table."""
     if committed is None:
-        return True  # an intervening commit touched the whole table
+        return True
     if not committed:
         return False  # nothing committed since our base read
-    if ours is None:
-        return True  # we rewrite the whole table over new commits
+
     def norm(pv: dict) -> tuple:
         return tuple(
             None if pv.get(c) is None else str(pv[c])

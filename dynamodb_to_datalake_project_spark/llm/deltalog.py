@@ -6,9 +6,8 @@ commitInfo actions); the current snapshot is a pure fold over them in
 version order: the LAST add/remove per file path wins. This module
 replays that fold without Spark or delta-spark — the audit a lake
 operator runs against a Delta table nobody can open ("how many active
-files/rows, which schema, which writer protocol?"), and the honest
-zero-dep companion to `merge_delta.py` (whose Delta MERGE leg needs
-the real delta-spark package).
+files/rows, which schema, which writer protocol?"). `deltatable.py`
+uses this fold to read the log `merge.merge_into_parquet` writes.
 
 Subset contract: JSON commits only (parquet checkpoints raise
 NotImplementedError — reading them is `llm.parquetmeta`'s job),

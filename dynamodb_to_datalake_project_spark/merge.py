@@ -16,6 +16,10 @@ Two implementations:
   overwrite). At 100 TB the target table is huge but a CDC batch
   touches a handful of time partitions — reading and rewriting just
   those keeps merge cost proportional to the batch, not the table.
+  The touched set is one flat `struct(partition cols) IN (...)`
+  predicate, which Catalyst folds into a single INSET partition
+  filter, so a backfill touching thousands of minute partitions takes
+  the same pruned path as a one-minute batch.
 
 Round 10 makes the lake table a REAL Delta-protocol table: every
 commit appends `_delta_log/<v>.json` actions (see `deltatable.py`),
@@ -32,7 +36,8 @@ and two physical modes exist:
   version: real time travel), reclaim space with `deltatable.vacuum`.
 
 `optimize_table` is the Delta OPTIMIZE: small-file compaction
-committed through the same protocol with dataChange=false actions.
+committed through the same protocol (`_commit`, the one stage → claim
+→ mark → apply tail) with dataChange=false actions.
 """
 
 from __future__ import annotations
@@ -351,9 +356,7 @@ def recover_pending_commits(
     return replayed
 
 
-def _resolve_retain_mode(
-    table_path: str, retain_files: "bool | None", delta_log: bool = True
-) -> bool:
+def _resolve_retain_mode(table_path: str, retain_files: "bool | None") -> bool:
     """Resolve the caller's `retain_files` flag against the TABLE's
     recorded mode (metaData.configuration, `deltatable.
     table_retain_mode`). None = inherit the table's mode (False for
@@ -365,7 +368,7 @@ def _resolve_retain_mode(
     double-counts."""
     recorded = (
         deltatable.table_retain_mode(table_path)
-        if delta_log and os.path.isdir(table_path)
+        if os.path.isdir(table_path)
         else None
     )
     if retain_files is None:
@@ -509,7 +512,7 @@ def _all_data_files(root: str) -> list[str]:
 def _claim_tip(
     table_path: str,
     base_version: int,
-    ours: "list[dict] | None",
+    ours: list[dict],
     partition_cols: list[str],
     txn_id: str,
     spins: int = 200,
@@ -537,6 +540,106 @@ def _claim_tip(
     return None
 
 
+def _commit(
+    table_path: str,
+    df: DataFrame,
+    partition_cols: list[str],
+    base_version: int,
+    ours: list[dict],
+    retain: bool,
+    dropped: "list[str] | tuple[str, ...]" = (),
+    schema_changed: bool = False,
+    data_change: bool = True,
+    operation: str = "MERGE",
+    hook=None,
+) -> bool:
+    """The atomic commit shared by merges and OPTIMIZE: stage `df` in
+    `_staging/<commit_id>/`, claim the next log version (`_claim_tip`),
+    write the marker (the commit point: one atomic rename) and swap the
+    staged partitions into place (`_apply_commit`). Partition dirs in
+    `dropped` that staged no replacement were emptied (hard deletes)
+    and are removed by the commit. Returns False, with the staging
+    discarded, when the OCC claim is lost — the caller recomputes from
+    a fresh snapshot."""
+    commit_id = uuid.uuid4().hex[:12]
+    staging = os.path.join(table_path, "_staging", commit_id)
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(staging)
+    rels = sorted(
+        {
+            os.path.relpath(root, staging)
+            for root, _dirs, files in os.walk(staging)
+            if any(f.endswith(".parquet") for f in files)
+        }
+    )
+    removed = [
+        rel
+        for rel in dropped
+        if rel not in rels and os.path.isdir(os.path.join(table_path, rel))
+    ]
+    # unpartitioned tables: record the CURRENT root data files so
+    # replay deletes exactly these and never a freshly-swapped
+    # staged file
+    root_removed: list[str] = []
+    if not partition_cols and "." in rels:
+        root_removed = sorted(
+            name
+            for name in os.listdir(table_path)
+            if os.path.isfile(os.path.join(table_path, name))
+            and not name.startswith(("_", "."))
+        )
+    if hook is not None:
+        hook()
+    claimed = _claim_tip(table_path, base_version, ours, partition_cols, commit_id)
+    if claimed is not None and not os.path.isdir(staging):
+        # defense in depth: if anything collected our staging while we
+        # raced (shouldn't happen inside the grace window), restage
+        # rather than commit adds for files that no longer exist
+        deltatable.release_claim(table_path, claimed)
+        claimed = None
+    if claimed is None:
+        # OCC loss: someone committed over our touched partitions since
+        # our read — the staged result is stale
+        shutil.rmtree(staging, ignore_errors=True)
+        return False
+    manifest = {
+        "partitions": rels,
+        "removed": removed,
+        "root_removed": root_removed,
+        "retain": bool(retain),
+        "delta": {
+            "version": claimed,
+            "txn": commit_id,
+            "actions": _delta_actions(
+                table_path,
+                staging,
+                rels,
+                removed,
+                root_removed,
+                partition_cols,
+                base_version,
+                deltatable.schema_string(df.schema),
+                commit_id,
+                retain=retain,
+                data_change=data_change,
+                operation=operation,
+                schema_changed=schema_changed,
+            ),
+        },
+    }
+    cdir = os.path.join(table_path, "_commits")
+    os.makedirs(cdir, exist_ok=True)
+    marker_tmp = os.path.join(cdir, f".{commit_id}.json.tmp")
+    with open(marker_tmp, "w") as f:
+        json.dump(manifest, f)
+    # the commit point: one atomic rename makes the commit durable
+    os.replace(marker_tmp, os.path.join(cdir, f"{commit_id}.json"))
+    _apply_commit(table_path, commit_id)
+    return True
+
+
 def merge_into_parquet(
     spark: SparkSession,
     table_path: str,
@@ -544,10 +647,8 @@ def merge_into_parquet(
     keys: list[str],
     precombine: list[str],
     partition_cols: list[str],
-    max_touched_partitions: int = 2000,
     op_col: str | None = None,
     delete_types: tuple[str, ...] = ("REMOVE",),
-    delta_log: bool = True,
     retain_files: "bool | None" = None,
     evolve_schema: bool = False,
     max_commit_retries: int = 3,
@@ -558,13 +659,19 @@ def merge_into_parquet(
 
     1. replay any interrupted prior commit (`recover_pending_commits`);
     2. derive touched partition tuples from the batch (small collect);
-    3. read only those partitions of the target (partition pruning via
-       predicate on partition columns);
+    3. read only those partitions of the target: one flat
+       `struct(partition_cols) IN (<touched tuples>)` filter, which
+       Catalyst turns into a single INSET partition filter at any
+       number of partitions, and which matches a NULL partition value
+       the way `eqNullSafe` does;
     4. union + latest-wins dedup (optionally honoring `op_col` hard
        deletes — see `upsert_dataframes`);
-    5. write the rewritten partitions to `_staging/<commit_id>/`, then
-       atomically create `_commits/<commit_id>.json` (the commit
-       point), then swap each staged partition directory into place.
+    5. commit through `_commit`: write the rewritten partitions to
+       `_staging/<commit_id>/`, claim the next Delta log version (OCC:
+       a stale merge overlapping a newer commit retries from a fresh
+       snapshot), atomically create `_commits/<commit_id>.json` (the
+       commit point), then swap each staged partition directory into
+       place and fill the log version.
 
     Crash safety (the Hudi-timeline property, minimally): before the
     marker exists the table is untouched (staged files are garbage-
@@ -574,7 +681,7 @@ def merge_into_parquet(
     of the live path. Assumes a rename-capable filesystem (local/HDFS);
     on S3-like stores use a real table format (Delta/Hudi/Iceberg).
     Underscore-prefixed dirs are invisible to parquet readers, so
-    `_staging`/`_commits` never pollute scans.
+    `_staging`/`_commits`/`_delta_log` never pollute scans.
 
     NOTE: assumes the partition columns are derived from immutable key
     fields (the reference partitions the lake by create_at — immutable
@@ -583,36 +690,35 @@ def merge_into_parquet(
     """
     if os.path.isdir(table_path):
         recover_pending_commits(table_path, staging_grace_seconds=3600.0)
-    retain_files = _resolve_retain_mode(table_path, retain_files, delta_log)
-    if retain_files and not delta_log:
-        raise ValueError(
-            "retain_files needs the delta log: without the active-set "
-            "fold a directory full of superseded files is unreadable"
-        )
+    retain_files = _resolve_retain_mode(table_path, retain_files)
     parts = touched_partitions(source, partition_cols)
     if not parts:
         return
-    if len(parts) > max_touched_partitions:
-        # A batch touching thousands of partitions (e.g. a backfill)
-        # degrades to a full-table merge: one OR-clause per partition
-        # would bloat analysis and the write rewrites most of the table
-        # anyway. Correctness is identical; only pruning is skipped.
-        parts = None
-    # our touched set in Delta partitionValues form (None = all)
-    ours = (
-        None
-        if parts is None
-        else [
-            {c: (None if p[c] is None else str(p[c])) for c in partition_cols}
+    # our touched set in Delta partitionValues form
+    ours = [
+        {c: (None if p[c] is None else str(p[c])) for c in partition_cols}
+        for p in parts
+    ]
+    # hard deletes can empty a touched partition entirely — it then has
+    # no staged replacement and must be dropped at commit time.
+    # Best-effort dir-name reconstruction (partition values here are
+    # pipeline-derived simple strings, P3); an unmatchable name just
+    # leaves the partition for the next compaction.
+    dropped = (
+        [
+            "/".join(
+                f"{c}={deltatable._HIVE_NULL if p[c] is None else p[c]}"
+                for c in partition_cols
+            )
             for p in parts
         ]
+        if partition_cols
+        else []
     )
     from pyspark.errors import AnalysisException
 
     for _attempt in range(max_commit_retries):
-        base_version = (
-            deltatable.current_version(table_path) if delta_log else -1
-        )
+        base_version = deltatable.current_version(table_path)
         try:
             if retain_files and base_version >= 0:
                 # retained-file table: the directory holds superseded
@@ -620,19 +726,19 @@ def merge_into_parquet(
                 target = deltatable.read_snapshot_df(spark, table_path)
             else:
                 reader = spark.read
-                if delta_log and base_version >= 0:
-                    # read with the LOG's schema, not one sampled
-                    # footer's: after schema evolution old partitions
-                    # lack the new columns and a footer-inferred read
-                    # could silently drop them (NULL-backfill needs
-                    # the full schema)
-                    sj = deltatable._schema_json_of(table_path)
-                    if sj:
-                        from pyspark.sql import types as T
+                # read with the LOG's schema, not one sampled footer's:
+                # after schema evolution old partitions lack the new
+                # columns and a footer-inferred read could silently
+                # drop them (NULL-backfill needs the full schema)
+                sj = (
+                    deltatable._schema_json_of(table_path)
+                    if base_version >= 0
+                    else None
+                )
+                if sj:
+                    from pyspark.sql import types as T
 
-                        reader = reader.schema(
-                            T.StructType.fromJson(json.loads(sj))
-                        )
+                    reader = reader.schema(T.StructType.fromJson(json.loads(sj)))
                 target = reader.parquet(table_path)
         except AnalysisException as e:
             # ONLY a missing/uninitialized table means "first batch":
@@ -648,8 +754,8 @@ def merge_into_parquet(
             # first batch: nothing to lose, write directly (replayable
             # from the checkpointed batch if interrupted). Table
             # CREATION is not concurrency-safe (two creators would race
-            # the overwrite itself, log or no log) — the reference
-            # serializes job starts (MaxConcurrentRuns=1).
+            # the overwrite itself) — the reference serializes job
+            # starts (MaxConcurrentRuns=1).
             cols = [c for c in source.columns if c != op_col]
             empty = source.select(*cols).limit(0)
             deduped = upsert_dataframes(
@@ -663,56 +769,67 @@ def merge_into_parquet(
             deduped.write.mode("overwrite").partitionBy(*partition_cols).parquet(
                 table_path
             )
-            if delta_log:
-                txn = uuid.uuid4().hex[:12]
-                if not deltatable.claim_version(table_path, 0, txn):
-                    raise ConcurrentWriteConflict(
-                        f"{table_path}: concurrent table creation"
-                    )
-                actions = [
+            txn = uuid.uuid4().hex[:12]
+            if not deltatable.claim_version(table_path, 0, txn):
+                raise ConcurrentWriteConflict(
+                    f"{table_path}: concurrent table creation"
+                )
+            actions = [
+                {
+                    "commitInfo": {
+                        "txnId": txn,
+                        "operation": "CREATE TABLE AS SELECT",
+                        "readVersion": -1,
+                    }
+                },
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+                deltatable.meta_action(
+                    deltatable.schema_string(deduped.schema),
+                    partition_cols,
                     {
-                        "commitInfo": {
-                            "txnId": txn,
-                            "operation": "CREATE TABLE AS SELECT",
-                            "readVersion": -1,
-                        }
+                        deltatable.RETAIN_CONFIG_KEY: (
+                            "true" if retain_files else "false"
+                        )
                     },
-                    {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-                    deltatable.meta_action(
-                        deltatable.schema_string(deduped.schema),
-                        partition_cols,
-                        {
-                            deltatable.RETAIN_CONFIG_KEY: (
-                                "true" if retain_files else "false"
-                            )
-                        },
-                    ),
-                ] + [
-                    {"add": deltatable.build_add(table_path, f, partition_cols)}
-                    for f in _all_data_files(table_path)
-                ]
-                deltatable.append_commit(table_path, 0, actions, txn)
-                deltatable.release_claim(table_path, 0)
+                ),
+            ] + [
+                {"add": deltatable.build_add(table_path, f, partition_cols)}
+                for f in _all_data_files(table_path)
+            ]
+            deltatable.append_commit(table_path, 0, actions, txn)
+            deltatable.release_claim(table_path, 0)
             return
         schema_changed = False
         if evolve_schema:
             target, source, schema_changed = _align_schemas(
                 target, source, op_col, partition_cols
             )
-        if parts is None:
-            existing = target
-        else:
-            pred = F.lit(False)
-            for p in parts:
-                clause = F.lit(True)
-                for c in partition_cols:
-                    # eqNullSafe: a null partition value (e.g. from an
-                    # unparseable timestamp) must still match its
-                    # existing partition — plain == excludes those rows
-                    # and the dynamic overwrite would then drop them.
-                    clause = clause & F.col(c).eqNullSafe(F.lit(p[c]))
-                pred = pred | clause
-            existing = target.filter(pred)
+        existing = target
+        if partition_cols:
+            # one flat IN over the partition tuple: Catalyst folds it
+            # into a single INSET partition filter, so analysis stays
+            # shallow at any number of touched partitions (a nested
+            # per-partition predicate overflows the JVM stack at a few
+            # hundred). Struct equality matches a NULL partition
+            # value (e.g. from an unparseable timestamp) like
+            # eqNullSafe — plain == would exclude those rows and the
+            # partition rewrite would then drop them. Literals take the
+            # table's partition types (a legacy table may infer int or
+            # date partition columns).
+            types = {f.name: f.dataType for f in target.schema.fields}
+            existing = target.filter(
+                F.struct(*partition_cols).isin(
+                    *[
+                        F.struct(
+                            *[
+                                F.lit(p[c]).cast(types[c]).alias(c)
+                                for c in partition_cols
+                            ]
+                        )
+                        for p in parts
+                    ]
+                )
+            )
         src_cols = list(target.columns) + ([op_col] if op_col else [])
         merged = upsert_dataframes(
             existing,
@@ -722,114 +839,18 @@ def merge_into_parquet(
             op_col=op_col,
             delete_types=delete_types,
         )
-
-        # --- atomic commit: stage, claim, mark, swap ---
-        commit_id = uuid.uuid4().hex[:12]
-        staging = os.path.join(table_path, "_staging", commit_id)
-        writer = merged.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staging)
-        rels = sorted(
-            {
-                os.path.relpath(root, staging)
-                for root, _dirs, files in os.walk(staging)
-                if any(f.endswith(".parquet") for f in files)
-            }
-        )
-        removed: list[str] = []
-        if op_col and partition_cols:
-            staged = set(rels)
-            if parts is not None:
-                # hard deletes can empty a touched partition entirely —
-                # it then has no staged replacement and must be dropped
-                # at commit time. Best-effort dir-name reconstruction
-                # (partition values here are pipeline-derived simple
-                # strings, P3); an unmatchable name just leaves the
-                # partition for the next compaction.
-                for p in parts:
-                    rel = "/".join(
-                        f"{c}={'__HIVE_DEFAULT_PARTITION__' if p[c] is None else p[c]}"
-                        for c in partition_cols
-                    )
-                    if rel not in staged and os.path.isdir(
-                        os.path.join(table_path, rel)
-                    ):
-                        removed.append(rel)
-            else:
-                # full-table merge (touched-partition cap exceeded): the
-                # staged output IS the whole table, so any on-disk leaf
-                # partition without a staged replacement was emptied by
-                # hard deletes and must still be dropped — the cap
-                # changes pruning, never delete semantics.
-                for root, _dirs, files in os.walk(table_path):
-                    rel = os.path.relpath(root, table_path)
-                    if rel == "." or rel.split(os.sep)[0].startswith(("_", ".")):
-                        continue
-                    if any(f.endswith(".parquet") for f in files) and rel not in staged:
-                        removed.append(rel)
-        # unpartitioned tables: record the CURRENT root data files so
-        # replay deletes exactly these and never a freshly-swapped
-        # staged file
-        root_removed: list[str] = []
-        if not partition_cols and "." in rels:
-            root_removed = sorted(
-                name
-                for name in os.listdir(table_path)
-                if os.path.isfile(os.path.join(table_path, name))
-                and not name.startswith(("_", "."))
-            )
-        manifest = {
-            "partitions": rels,
-            "removed": removed,
-            "root_removed": root_removed,
-            "retain": bool(retain_files),
-        }
-        if _hook_before_commit is not None:
-            _hook_before_commit()
-        if delta_log:
-            claimed = _claim_tip(
-                table_path, base_version, ours, partition_cols, commit_id
-            )
-            if claimed is not None and not os.path.isdir(staging):
-                # defense in depth: if anything collected our staging
-                # while we raced (shouldn't happen inside the grace
-                # window), restage rather than commit adds for files
-                # that no longer exist
-                deltatable.release_claim(table_path, claimed)
-                claimed = None
-            if claimed is None:
-                # OCC loss: someone committed over our touched
-                # partitions since our read — the staged merge is
-                # stale. Discard and recompute from the new snapshot.
-                shutil.rmtree(staging, ignore_errors=True)
-                continue
-            manifest["delta"] = {
-                "version": claimed,
-                "txn": commit_id,
-                "actions": _delta_actions(
-                    table_path,
-                    staging,
-                    rels,
-                    removed,
-                    root_removed,
-                    partition_cols,
-                    base_version,
-                    deltatable.schema_string(merged.schema),
-                    commit_id,
-                    retain=retain_files,
-                    schema_changed=schema_changed,
-                ),
-            }
-        cdir = os.path.join(table_path, "_commits")
-        os.makedirs(cdir, exist_ok=True)
-        marker_tmp = os.path.join(cdir, f".{commit_id}.json.tmp")
-        with open(marker_tmp, "w") as f:
-            json.dump(manifest, f)
-        # the commit point: one atomic rename makes the merge durable
-        os.replace(marker_tmp, os.path.join(cdir, f"{commit_id}.json"))
-        _apply_commit(table_path, commit_id)
-        return
+        if _commit(
+            table_path,
+            merged,
+            partition_cols,
+            base_version,
+            ours,
+            retain_files,
+            dropped=dropped,
+            schema_changed=schema_changed,
+            hook=_hook_before_commit,
+        ):
+            return
     raise ConcurrentWriteConflict(
         f"{table_path}: lost the commit race {max_commit_retries} times"
     )
@@ -913,20 +934,6 @@ def optimize_table(
         else:
             df = df.coalesce(1)
 
-        commit_id = uuid.uuid4().hex[:12]
-        staging = os.path.join(table_path, "_staging", commit_id)
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staging)
-        rels = sorted(
-            {
-                os.path.relpath(root, staging)
-                for root, _dirs, fl in os.walk(staging)
-                if any(f.endswith(".parquet") for f in fl)
-            }
-        )
-        root_removed = sorted(todo.get(".", []))
         ours = (
             [
                 deltatable.partition_values_of(rel + "/f", partition_cols)
@@ -935,44 +942,17 @@ def optimize_table(
             if partition_cols
             else [{}]
         )
-        claimed = _claim_tip(
-            table_path, base_version, ours, partition_cols, commit_id
-        )
-        if claimed is None:
-            shutil.rmtree(staging, ignore_errors=True)
-            continue
-        manifest = {
-            "partitions": rels,
-            "removed": [],
-            "root_removed": root_removed,
-            "retain": bool(retain_files),
-            "delta": {
-                "version": claimed,
-                "txn": commit_id,
-                "actions": _delta_actions(
-                    table_path,
-                    staging,
-                    rels,
-                    [],
-                    root_removed,
-                    partition_cols,
-                    base_version,
-                    deltatable.schema_string(df.schema),
-                    commit_id,
-                    retain=retain_files,
-                    data_change=False,
-                    operation="OPTIMIZE",
-                ),
-            },
-        }
-        cdir = os.path.join(table_path, "_commits")
-        os.makedirs(cdir, exist_ok=True)
-        marker_tmp = os.path.join(cdir, f".{commit_id}.json.tmp")
-        with open(marker_tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(marker_tmp, os.path.join(cdir, f"{commit_id}.json"))
-        _apply_commit(table_path, commit_id)
-        return len(todo)
+        if _commit(
+            table_path,
+            df,
+            partition_cols,
+            base_version,
+            ours,
+            retain_files,
+            data_change=False,
+            operation="OPTIMIZE",
+        ):
+            return len(todo)
     raise ConcurrentWriteConflict(
         f"{table_path}: optimize lost the commit race {max_commit_retries} times"
     )

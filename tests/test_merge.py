@@ -316,32 +316,57 @@ def test_unpartitioned_replay_half_applied_swap_loses_nothing(spark, tmp_path):
     assert got == {("a", "new"), ("b", "new")}  # nothing lost, nothing stale
 
 
-def test_full_merge_fallback_still_removes_emptied_partition(spark, tmp_path):
-    """Regression: when the touched-partition cap degrades the merge to
-    a full-table rewrite, hard deletes must STILL drop partitions they
-    emptied (the cap changes pruning, never delete semantics)."""
-    path = str(tmp_path / "caplake")
-    cols = ["id", "update_at", "note", "day"]
-    spark.createDataFrame(
-        _ts_rows(
-            [("a", "2023-01-01T10:00:00", "v1"), ("b", "2023-01-02T10:00:00", "v1")]
-        ),
-        cols,
-    ).write.partitionBy("day").parquet(path)
-    batch = spark.createDataFrame(
-        [
-            ("a", "2023-01-01T12:00:00", None, "2023-01-01", "REMOVE"),
-            ("b", "2023-01-02T12:00:00", "v2", "2023-01-02", "MODIFY"),
-        ],
-        "id string, update_at string, note string, day string, event_name string",
+def test_merge_touching_400_minute_partitions(spark, tmp_path):
+    """Regression: one batch touching 400+ five-level create-minute
+    partitions (a backfill) merges through the pruned path. A
+    per-partition OR chain of this size overflowed the JVM stack during
+    analysis. The batch also updates a NULL partition, which must keep
+    its rows, and a REMOVE empties one partition, whose directory must
+    go."""
+    path = str(tmp_path / "minutelake")
+    part_cols = ["year", "month", "day", "hour", "minute"]
+    schema = (
+        "id string, update_at string, note string, op string, "
+        "year string, month string, day string, hour string, minute string"
+    )
+    minutes = [
+        ("2023", "07", "30", f"{i // 60:02d}", f"{i % 60:02d}") for i in range(400)
+    ]
+    nulls = (None,) * 5
+    initial = [
+        (f"k{i}", "2023-07-30T00:00:00", "v1", "INSERT", *p)
+        for i, p in enumerate(minutes)
+    ] + [("n0", "2023-07-30T00:00:00", "v1", "INSERT", *nulls)]
+    batch = (
+        [("k0", "2023-07-30T01:00:00", None, "REMOVE", *minutes[0])]
+        + [
+            (f"k{i}", "2023-07-30T01:00:00", "v2", "MODIFY", *p)
+            for i, p in enumerate(minutes)
+            if i > 0
+        ]
+        + [("n1", "2023-07-30T01:00:00", "v1", "INSERT", *nulls)]
+    )
+    init_df = spark.createDataFrame(initial, schema)
+    batch_df = spark.createDataFrame(batch, schema)
+    merge.merge_into_parquet(
+        spark, path, init_df, ["id"], ["update_at"], part_cols, op_col="op"
     )
     merge.merge_into_parquet(
-        spark, path, batch, ["id"], ["update_at"], ["day"],
-        op_col="event_name", max_touched_partitions=1,  # force full merge
+        spark, path, batch_df, ["id"], ["update_at"], part_cols, op_col="op"
     )
-    state = {(r.id, r.note) for r in spark.read.parquet(path).collect()}
-    assert state == {("b", "v2")}
-    assert not os.path.isdir(os.path.join(path, "day=2023-01-01"))
+
+    cols = [c for c in init_df.columns if c != "op"]
+    want = merge.upsert_dataframes(
+        init_df.select(*cols), batch_df, ["id"], ["update_at"], op_col="op"
+    )
+    got = {tuple(r) for r in spark.read.parquet(path).select(*cols).collect()}
+    assert got == {tuple(r) for r in want.collect()}
+    assert len(got) == 401  # k0 deleted; n0 and n1 share the NULL partition
+    emptied = "/".join(f"{c}={v}" for c, v in zip(part_cols, minutes[0]))
+    assert not os.path.isdir(os.path.join(path, emptied))
+    assert os.path.isdir(
+        os.path.join(path, "/".join(f"{c}={v}" for c, v in zip(part_cols, minutes[1])))
+    )
 
 
 def test_hard_delete_tie_is_deterministic_delete_loses(spark):
@@ -483,23 +508,6 @@ def test_scd2_merge_null_transitions(spark):
             assert prev["valid_to"] == nxt["valid_from"]
 
 
-def test_delta_merge_unavailable_raises_clearly(spark, tmp_path):
-    """Without delta-spark (this container), merge_into_delta must fail
-    fast with a message pointing at the parquet fallback — not blow up
-    mid-write with a ClassNotFound."""
-    import pytest
-
-    from dynamodb_to_datalake_project_spark import merge_delta
-
-    if merge_delta.delta_available():
-        pytest.skip("delta-spark present; covered by the equivalence test")
-    src = _df(spark, [("a", "2023-01-01T00:00:00", "v1")])
-    with pytest.raises(RuntimeError, match="merge_into_parquet"):
-        merge_delta.merge_into_delta(
-            spark, str(tmp_path / "t"), src, ["id"], ["update_at"], []
-        )
-
-
 MERGE_NULL_BATCHES = [
     [("a", "2023-01-01T00:00:00", "v1", "INSERT"),
      ("b", "2023-01-01T00:00:00", "v1", "INSERT")],
@@ -523,11 +531,11 @@ MERGE_NULL_EXPECTED = {
 
 
 def test_parquet_merge_null_op_and_precombine(spark, tmp_path):
-    """Pins the NULL contract on the RUNNABLE parquet path: NULL op is a
-    normal upsert, NULL precombine sorts below every non-NULL value
-    (desc defaults to nulls-last), and a NULL-vs-NULL precombine tie
-    updates toward source — the same sequence the delta-equivalence
-    test replays when delta-spark exists."""
+    """Pins the NULL contract of the lake merge over the FIXTURES.md
+    batch sequence (insert, update, in-batch dup, late-stale, hard
+    delete): NULL op is a normal upsert, NULL precombine sorts below
+    every non-NULL value (desc defaults to nulls-last), and a
+    NULL-vs-NULL precombine tie updates toward source."""
     ppath = str(tmp_path / "parquet")
     schema = "id string, update_at string, note string, op string"
     for rows in MERGE_NULL_BATCHES:
@@ -539,73 +547,6 @@ def test_parquet_merge_null_op_and_precombine(spark, tmp_path):
         r.id: (r.update_at, r.note) for r in spark.read.parquet(ppath).collect()
     }
     assert got == MERGE_NULL_EXPECTED
-
-
-def test_delta_merge_equivalence(spark, tmp_path):
-    """When delta-spark IS installed, MERGE INTO must produce exactly
-    the state merge_into_parquet produces on the FIXTURES.md batch
-    sequence (insert, update, in-batch dup, late-stale, hard delete)
-    plus the NULL op / NULL precombine cases from
-    test_parquet_merge_null_op_and_precombine. Skipped (not passed) in
-    environments without the package."""
-    import pytest
-
-    pytest.importorskip("delta")
-    from dynamodb_to_datalake_project_spark import merge_delta
-
-    dpath, ppath = str(tmp_path / "delta"), str(tmp_path / "parquet")
-    schema = "id string, update_at string, note string, op string"
-    for rows in MERGE_NULL_BATCHES:
-        src = spark.createDataFrame(rows, schema)
-        merge_delta.merge_into_delta(
-            spark, dpath, src, ["id"], ["update_at"], [], op_col="op"
-        )
-        merge.merge_into_parquet(
-            spark, ppath, src, ["id"], ["update_at"], [], op_col="op"
-        )
-    got = {
-        r.id: (r.update_at, r.note)
-        for r in spark.read.format("delta").load(dpath).collect()
-    }
-    want = {
-        r.id: (r.update_at, r.note) for r in spark.read.parquet(ppath).collect()
-    }
-    assert got == want == MERGE_NULL_EXPECTED
-
-
-def test_precombine_comparator_null_safe(spark):
-    """The Delta-leg comparator must mirror the window path's
-    desc-nulls-last + __src-desc order WITHOUT delta-spark installed:
-    NULL below every value, NULL-vs-NULL a tie (falls to next field,
-    ultimately toward source), plain values lexicographic."""
-    from dynamodb_to_datalake_project_spark.merge_delta import (
-        _precombine_newer_or_tie,
-    )
-
-    cases = [  # (s_u, s_v, t_u, t_v, expect source>=target)
-        (2, 9, 1, 9, True),     # first field decides
-        (1, 9, 2, 9, False),
-        (1, 2, 1, 1, True),     # first tied, second decides
-        (1, 1, 1, 2, False),
-        (1, 1, 1, 1, True),     # full tie -> source wins
-        (None, 9, 1, 0, False),  # NULL u loses to any value
-        (1, 0, None, 9, True),   # any value beats NULL u
-        (None, 2, None, 1, True),  # NULL-vs-NULL u ties, v decides
-        (None, 1, None, 2, False),
-        (None, None, None, None, True),  # all-NULL tie -> source wins
-        (1, None, 1, 1, False),  # second-field NULL loses
-        (1, 1, 1, None, True),
-    ]
-    df = spark.createDataFrame(
-        [
-            ((su, sv), (tu, tv), exp)
-            for su, sv, tu, tv, exp in cases
-        ],
-        "s struct<u:int,v:int>, t struct<u:int,v:int>, expect boolean",
-    )
-    got = df.withColumn("got", _precombine_newer_or_tie(["u", "v"])).collect()
-    for r in got:
-        assert r.got == r.expect, (r.s, r.t, r.got, r.expect)
 
 
 # ---------------------------------------------------------------------------
@@ -1194,10 +1135,13 @@ def test_retain_mode_is_a_table_property(spark, tmp_path):
 def test_live_marker_and_staging_protected_by_grace(spark, tmp_path):
     """A commit marker written milliseconds ago belongs to a LIVE
     writer mid-apply: the hot-path recovery must leave it (and its
-    staging) alone inside the grace window — replaying it would race
-    the owner's rmtree/rename and can lose a partition. Once aged, it
-    is a crashed writer's leftover and replay heals it (ADVICE r10)."""
+    staging and version claim) alone inside the grace window —
+    replaying it would race the owner's rmtree/rename and can lose a
+    partition. Once aged, it is a crashed writer's leftover and replay
+    heals it, filling the claimed log version (ADVICE r10)."""
     import json as _json
+
+    from dynamodb_to_datalake_project_spark import deltatable
 
     path = str(tmp_path / "lake")
     cols = ["id", "update_at", "note", "day"]
@@ -1206,22 +1150,37 @@ def test_live_marker_and_staging_protected_by_grace(spark, tmp_path):
         spark.createDataFrame(
             _ts_rows([("a", "2023-01-01T10:00:00", "v1")]), cols
         ),
-        ["id"], ["update_at"], ["day"], delta_log=False,
+        ["id"], ["update_at"], ["day"],
     )
+    assert deltatable.current_version(path) == 0
 
-    # hand-build a committed-but-unapplied state (marker + staging)
+    # hand-build a committed-but-unapplied state: staging, version
+    # claim and a marker carrying the log actions
     cid = "deadbeef0001"
     rel = "day=2023-01-09"
-    sdir = os.path.join(path, "_staging", cid, rel)
+    staging = os.path.join(path, "_staging", cid)
+    sdir = os.path.join(staging, rel)
     os.makedirs(sdir)
     spark.createDataFrame(
         [("z", "2023-01-09T10:00:00", "vz")], ["id", "update_at", "note"]
     ).coalesce(1).write.mode("overwrite").parquet(sdir)
+    staged = [
+        f"{rel}/{f}" for f in os.listdir(sdir) if f.endswith(".parquet")
+    ]
+    assert deltatable.claim_version(path, 1, cid)
+    actions = [
+        {"commitInfo": {"txnId": cid, "operation": "MERGE", "readVersion": 0}}
+    ] + [{"add": deltatable.build_add(staging, f, ["day"])} for f in staged]
     cdir = os.path.join(path, "_commits")
     os.makedirs(cdir, exist_ok=True)
-    with open(os.path.join(cdir, f"{cid}.json"), "w") as f:
+    marker = os.path.join(cdir, f"{cid}.json")
+    with open(marker, "w") as f:
         _json.dump(
-            {"partitions": [rel], "removed": [], "root_removed": []}, f
+            {
+                "partitions": [rel], "removed": [], "root_removed": [],
+                "delta": {"version": 1, "txn": cid, "actions": actions},
+            },
+            f,
         )
 
     # fresh marker: hot path (grace) must not touch it
@@ -1229,18 +1188,22 @@ def test_live_marker_and_staging_protected_by_grace(spark, tmp_path):
         merge.recover_pending_commits(path, staging_grace_seconds=3600.0)
         == []
     )
-    assert os.path.isfile(os.path.join(cdir, f"{cid}.json"))
+    assert os.path.isfile(marker)
     assert os.path.isdir(sdir)
+    assert deltatable.current_version(path) == 0
+    assert not deltatable.claim_version(path, 1, "another-writer")
 
     # aged marker: hot path replays it
-    for p in (os.path.join(cdir, f"{cid}.json"),):
-        old = os.path.getmtime(p) - 7200
-        os.utime(p, (old, old))
+    old = os.path.getmtime(marker) - 7200
+    os.utime(marker, (old, old))
     assert merge.recover_pending_commits(
         path, staging_grace_seconds=3600.0
     ) == [cid]
-    assert not os.path.exists(os.path.join(cdir, f"{cid}.json"))
+    assert not os.path.exists(marker)
     assert os.path.isdir(os.path.join(path, rel))
+    assert deltatable.current_version(path) == 1
+    assert set(deltatable.snapshot_at(path)["active_files"]) >= set(staged)
+    assert {r.id for r in spark.read.parquet(path).collect()} == {"a", "z"}
 
 
 def test_checkpoint_bounded_to_labeled_version(spark, tmp_path, monkeypatch):

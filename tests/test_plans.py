@@ -178,3 +178,11 @@ def test_every_headline_query_exists_in_catalog():
 
     missing = [q for q in bench.HEADLINE if q not in catalog.QUERIES]
     assert not missing, missing
+
+
+def test_catalog_priority_has_no_duplicates():
+    """`_PRIORITY` sets the catalog iteration order; a repeated name is
+    dead weight (the first occurrence already decides the position)."""
+    names = catalog._PRIORITY
+    dupes = sorted({n for n in names if names.count(n) > 1})
+    assert not dupes, f"duplicate _PRIORITY entries: {dupes}"
