@@ -43,6 +43,10 @@ import json
 import os
 import uuid
 
+from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
+    read_parquet_footer,
+)
+
 CHECKPOINT_INTERVAL = 10
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -128,24 +132,6 @@ def partition_values_of(rel_file: str, partition_cols: list[str]) -> dict:
     return {c: vals.get(c) for c in partition_cols}
 
 
-def _file_num_rows(path: str) -> int:
-    """numRecords from the parquet footer alone — tail read, never
-    the data pages (a merge batch can stage GB-sized files)."""
-    from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
-        parse_parquet_footer,
-    )
-
-    size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        f.seek(max(0, size - 8))
-        tail8 = f.read(8)
-        flen = int.from_bytes(tail8[:4], "little")
-        take = min(size, flen + 8)
-        f.seek(size - take)
-        blob = b"PAR1" + f.read(take)
-    return parse_parquet_footer(blob)["num_rows"]
-
-
 def build_add(
     root: str, rel_file: str, partition_cols: list[str],
     data_change: bool = True,
@@ -156,13 +142,16 @@ def build_add(
     rearrangements (OPTIMIZE/compaction) so streaming readers skip
     them."""
     p = os.path.join(root, rel_file)
+    st = os.stat(p)
     return {
         "path": rel_file,
         "partitionValues": partition_values_of(rel_file, partition_cols),
-        "size": os.path.getsize(p),
-        "modificationTime": int(os.stat(p).st_mtime * 1000),
+        "size": st.st_size,
+        "modificationTime": int(st.st_mtime * 1000),
         "dataChange": data_change,
-        "stats": json.dumps({"numRecords": _file_num_rows(p)}),
+        "stats": json.dumps(
+            {"numRecords": read_parquet_footer(p)["num_rows"]}
+        ),
     }
 
 

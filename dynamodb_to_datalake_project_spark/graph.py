@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dynamodb_to_datalake_project_spark.catalog import query
 from dynamodb_to_datalake_project_spark.lake import load_table
@@ -1203,8 +1204,12 @@ def triangle_count(
     # wedge-join path below runs unchanged. Identical enumeration
     # either way: every triangle found exactly once at its apex edge
     # pair.
+    # the broadcast kernel ranks ids as int64: other id types (float,
+    # string) would be truncated or fail, so they take the join path
     n_edges = und.count()
-    if n_edges <= _TRI_BROADCAST_EDGES:
+    if n_edges <= _TRI_BROADCAST_EDGES and isinstance(
+        und.schema["u"].dataType, T.IntegralType
+    ):
         out = _triangle_count_broadcast(und, n_edges)
         if out is not None:
             return out

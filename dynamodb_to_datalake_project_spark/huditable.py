@@ -56,6 +56,10 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
+    read_parquet_footer,
+)
+
 HOODIE_DIR = ".hoodie"
 WRITE_TOKEN = "0-0-0"
 #: deterministic instant base: yyyyMMddHHmmssSSS shape, ordinal-bumped
@@ -338,7 +342,7 @@ def upsert(
             os.path.join(src_dir, files[0]), os.path.join(dst_dir, fname)
         )
         full = os.path.join(dst_dir, fname)
-        n_rows = _footer_num_rows(full)
+        n_rows = read_parquet_footer(full)["num_rows"]
         # |batch ∩ old slice| by inclusion-exclusion over distinct
         # keys (see the batch_keys aggregation above)
         upd = (
@@ -387,27 +391,6 @@ def upsert(
         json.dump(commit_body, f, indent=2)
     os.replace(tmp, cpath)
     return instant
-
-
-def _footer_num_rows(path: str) -> int:
-    """num_rows from the parquet footer alone — tail read, never the
-    data pages (the previous shape read the WHOLE slice into memory
-    per footer parse)."""
-    from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
-        parse_parquet_footer,
-    )
-
-    size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        f.seek(max(0, size - 8))
-        tail8 = f.read(8)
-        flen = int.from_bytes(tail8[:4], "little")
-        take = min(size, flen + 8)
-        f.seek(size - take)
-        blob = f.read(take)
-    if take < size:
-        blob = b"PAR1" + blob  # parse wants the leading magic too
-    return int(parse_parquet_footer(blob)["num_rows"])
 
 
 def _prev_rows(table_path: str, live: dict, fid: str) -> int:

@@ -4,7 +4,7 @@ composed entirely from in-repo pieces: the Avro container encoder
 (`llm.avrofile.encode_avro`, complex types) writes manifest lists and
 manifests, parquet data files are written by Spark's native writer
 (distributed — the 100 TB path), and their footers are read back
-tail-only (`llm.parquetmeta.parse_parquet_footer`) for record counts
+tail-only (`llm.parquetmeta.read_parquet_footer`) for record counts
 and per-column value bounds.
 
 Reference parity: this is the Iceberg generalization of the catalog-
@@ -52,6 +52,10 @@ import json
 import os
 import struct
 import uuid
+
+from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
+    read_parquet_footer,
+)
 
 META_DIR = "metadata"
 DATA_DIR = "data"
@@ -292,23 +296,6 @@ def _write_metadata(table_path: str, version: int, meta: dict) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _footer(path: str) -> dict:
-    from dynamodb_to_datalake_project_spark.llm.parquetmeta import (
-        parse_parquet_footer,
-    )
-
-    size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        f.seek(max(0, size - 8))
-        tail8 = f.read(8)
-        flen = int.from_bytes(tail8[:4], "little")
-        take = min(size, flen + 8 + 4)
-        f.seek(size - take)
-        tail = f.read(take)
-    # parse_parquet_footer wants leading magic too; fake the head
-    return parse_parquet_footer(b"PAR1" + tail if take < size else tail)
-
-
 def _decode_stat(raw: bytes, ptype: str) -> "int | None":
     if raw is None:
         return None
@@ -333,7 +320,7 @@ def _data_file_record(
     a long and whose stats are present in EVERY row group (partial
     stats cannot bound the file)."""
     full = os.path.join(table_path, rel_path)
-    meta = _footer(full)
+    meta = read_parquet_footer(full)
     types = {c["name"]: c["type"] for c in meta["columns"]}
     lo: "dict[str, int]" = {}
     hi: "dict[str, int]" = {}

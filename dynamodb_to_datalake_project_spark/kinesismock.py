@@ -3,8 +3,9 @@ mock: a shard-partitioned stream with sequence-number offsets, wired
 into Structured Streaming as a REAL source via PySpark 4's Python
 data source API (`pyspark.sql.datasource`) — shard fan-out becomes
 one InputPartition per shard, resume-from-sequence rides Spark's own
-offset log, and every downstream plan (`start_cdc_merge`,
-watermarked windows) is unchanged from the file-drop source.
+offset log, and every downstream plan (the `cdc.make_merge_batch_fn`
+foreachBatch merge, watermarked windows) is unchanged from the
+file-drop source.
 
 The reference consumes DynamoDB Streams through a Lambda
 (lambda_functions/dynamodb_stream_consumer.py:31-49) whose event
@@ -421,8 +422,9 @@ def read_kinesis_stream(
 ) -> DataFrame:
     """S6 hot side: shard-parallel Kinesis-shaped stream -> rows of
     (shard_id, sequence_number, partition_key) + the payload columns
-    parsed from the data blob. Drop-in ahead of `start_cdc_merge`'s
-    foreachBatch merge — same plan as the JSON-drop source, different
+    parsed from the data blob. Feed it to a `foreachBatch` merge built
+    by `cdc.make_merge_batch_fn` — the batch body `start_cdc_merge`
+    runs over its JSON-drop directory; same plan, different
     transport."""
     spark.dataSource.register(KinesisMockDataSource)
     raw = (

@@ -227,6 +227,33 @@ def write_json_lines_zstd(df: DataFrame, path: str) -> int:
     return int(sum(counts))
 
 
+def _zstd_json_rows(raw: DataFrame, schema: T.StructType | str) -> DataFrame:
+    """binaryFile `content` rows -> one Arrow stage decompressing each
+    `.json.zst` part -> `from_json` with the explicit schema."""
+
+    def decode(batches):
+        import pandas as pd
+
+        from dynamodb_to_datalake_project_spark.llm.zstd import (
+            zstd_decompress,
+        )
+
+        for pdf in batches:
+            lines: list[str] = []
+            for blob in pdf["content"]:
+                text = zstd_decompress(bytes(blob)).decode("utf-8")
+                lines.extend(ln for ln in text.split("\n") if ln)
+            yield pd.DataFrame({"line": lines})
+
+    if isinstance(schema, T.StructType):
+        schema = schema.simpleString()
+    return (
+        raw.mapInPandas(decode, "line string")
+        .select(F.from_json("line", schema).alias("j"))
+        .select("j.*")
+    )
+
+
 def read_json_lines_zstd(
     spark: SparkSession, path: str, schema: T.StructType | str
 ) -> DataFrame:
@@ -237,35 +264,13 @@ def read_json_lines_zstd(
     everywhere in this module). Files parallelize by part; each part
     decodes independently, so the scan scales with partition count
     exactly like the gzip path."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
-    from pyspark.sql import functions as F
-
-    def decode(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        from dynamodb_to_datalake_project_spark.llm.zstd import (
-            zstd_decompress,
-        )
-
-        for pdf in batches:
-            lines: list[str] = []
-            for blob in pdf["content"]:
-                text = zstd_decompress(bytes(blob)).decode("utf-8")
-                lines.extend(ln for ln in text.split("\n") if ln)
-            yield _pd.DataFrame({"line": lines})
-
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.json.zst")
         .load(path)
         .select("content")
     )
-    lines = raw.mapInPandas(decode, "line string")
-    if isinstance(schema, T.StructType):
-        schema = schema.simpleString()
-    return lines.select(
-        F.from_json("line", schema).alias("j")
-    ).select("j.*")
+    return _zstd_json_rows(raw, schema)
 
 
 def read_json_lines_zstd_stream(
@@ -281,11 +286,6 @@ def read_json_lines_zstd_stream(
     binaryFile file source (explicit schema, bounded files/trigger =
     T6, glob-filtered) -> one Arrow decode stage -> from_json.
     Offsets/exactly-once ride the file source's checkpoint contract."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
-    from pyspark.sql import functions as F
-
     bin_schema = T.StructType(
         [
             T.StructField("path", T.StringType()),
@@ -303,26 +303,7 @@ def read_json_lines_zstd_stream(
         .load(path)
         .select("content")
     )
-
-    def decode(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        from dynamodb_to_datalake_project_spark.llm.zstd import (
-            zstd_decompress,
-        )
-
-        for pdf in batches:
-            lines: list[str] = []
-            for blob in pdf["content"]:
-                text = zstd_decompress(bytes(blob)).decode("utf-8")
-                lines.extend(ln for ln in text.split("\n") if ln)
-            yield _pd.DataFrame({"line": lines})
-
-    if isinstance(schema, T.StructType):
-        schema = schema.simpleString()
-    return (
-        raw.mapInPandas(decode, "line string")
-        .select(F.from_json("line", schema).alias("j"))
-        .select("j.*")
-    )
+    return _zstd_json_rows(raw, schema)
 
 
 def start_zstd_json_merge(

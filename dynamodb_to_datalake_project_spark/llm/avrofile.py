@@ -24,27 +24,17 @@ import json
 import struct
 import zlib
 
+from dynamodb_to_datalake_project_spark.llm.wire import (
+    WireCursor,
+    write_zigzag,
+)
+
 _MAGIC = b"Obj\x01"
 _SIMPLE = ("null", "boolean", "int", "long", "double", "string", "bytes")
 
 
-def _zz_encode(v: int) -> bytes:
-    u = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-class _AvroReader:
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.pos = pos
+class _AvroReader(WireCursor):
+    """Container-file cursor: zigzag longs, raw and length-prefixed bytes."""
 
     def read(self, n: int) -> bytes:
         if self.pos + n > len(self.buf):
@@ -52,18 +42,6 @@ class _AvroReader:
         out = self.buf[self.pos : self.pos + n]
         self.pos += n
         return out
-
-    def zigzag(self) -> int:
-        out = shift = 0
-        while True:
-            b = self.read(1)[0]
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-            if shift > 70:
-                raise ValueError("avro: varint too long")
-        return (out >> 1) ^ -(out & 1)
 
     def bytes_(self) -> bytes:
         n = self.zigzag()
@@ -138,14 +116,14 @@ def _write_value(t: str, v) -> bytes:
     if t == "boolean":
         return b"\x01" if v else b"\x00"
     if t in ("int", "long"):
-        return _zz_encode(int(v))
+        return write_zigzag(int(v))
     if t == "double":
         return struct.pack("<d", float(v))
     if t == "string":
         enc = v.encode("utf-8")
-        return _zz_encode(len(enc)) + enc
+        return write_zigzag(len(enc)) + enc
     if t == "bytes":
-        return _zz_encode(len(v)) + bytes(v)
+        return write_zigzag(len(v)) + bytes(v)
     raise NotImplementedError(f"avro: type {t}")
 
 
@@ -156,33 +134,33 @@ def _write_field(t, v) -> bytes:
     if isinstance(t, tuple):
         if t[0] == "optional":
             if v is None:
-                return _zz_encode(0)
-            return _zz_encode(1) + _write_value(t[1], v)
+                return write_zigzag(0)
+            return write_zigzag(1) + _write_value(t[1], v)
         if t[0] == "array":
             # one block: count, items, then the 0 terminator
             items = list(v or [])
             out = bytearray()
             if items:
-                out += _zz_encode(len(items))
+                out += write_zigzag(len(items))
                 for el in items:
                     out += _write_field(t[1], el)
-            out += _zz_encode(0)
+            out += write_zigzag(0)
             return bytes(out)
         if t[0] == "map":
             # sorted keys: deterministic bytes for identical dicts
             pairs = sorted((v or {}).items())
             out = bytearray()
             if pairs:
-                out += _zz_encode(len(pairs))
+                out += write_zigzag(len(pairs))
                 for k, mv in pairs:
                     kb = k.encode("utf-8")
-                    out += _zz_encode(len(kb)) + kb
+                    out += write_zigzag(len(kb)) + kb
                     out += _write_value(t[1], mv)
-            out += _zz_encode(0)
+            out += write_zigzag(0)
             return bytes(out)
         if t[0] == "enum":
             try:
-                return _zz_encode(t[1].index(v))
+                return write_zigzag(t[1].index(v))
             except ValueError:
                 raise ValueError(f"avro: {v!r} not an enum symbol")
         if t[0] == "fixed":
@@ -281,11 +259,11 @@ def encode_avro(
         "avro.codec": codec.encode("ascii"),
     }
     out = bytearray(_MAGIC)
-    out += _zz_encode(len(meta))
+    out += write_zigzag(len(meta))
     for k, v in meta.items():
         kb = k.encode("utf-8")
-        out += _zz_encode(len(kb)) + kb + _zz_encode(len(v)) + v
-    out += _zz_encode(0)
+        out += write_zigzag(len(kb)) + kb + write_zigzag(len(v)) + v
+    out += write_zigzag(0)
     out += sync
     for at in range(0, len(records), records_per_block):
         chunk = records[at : at + records_per_block]
@@ -297,7 +275,7 @@ def encode_avro(
         if codec == "deflate":
             co = zlib.compressobj(9, zlib.DEFLATED, -15)
             data = co.compress(data) + co.flush()
-        out += _zz_encode(len(chunk)) + _zz_encode(len(data)) + data + sync
+        out += write_zigzag(len(chunk)) + write_zigzag(len(data)) + data + sync
     return bytes(out)
 
 

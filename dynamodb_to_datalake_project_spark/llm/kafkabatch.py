@@ -14,7 +14,7 @@ protocol spec, both directions:
   a varint-framed key/value pair).
 
 The CRC is verified on parse (table-driven CRC32C from
-`llm.tfrecord`); compression attribute bits other than none raise
+`llm.wire`); compression attribute bits other than none raise
 NotImplementedError (honest boundary), malformed framing raises
 ValueError. Offline segment replay is an Arrow map-only walk."""
 
@@ -22,40 +22,15 @@ from __future__ import annotations
 
 import struct
 
-from dynamodb_to_datalake_project_spark.llm.tfrecord import crc32c
+from dynamodb_to_datalake_project_spark.llm.wire import (
+    WireCursor,
+    crc32c,
+    write_zigzag,
+)
 
 
-def _zz(v: int) -> bytes:
-    u = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-class _VReader:
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.pos = pos
-
-    def zigzag(self) -> int:
-        out = shift = 0
-        while True:
-            if self.pos >= len(self.buf):
-                raise ValueError("kafka: truncated varint")
-            b = self.buf[self.pos]
-            self.pos += 1
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return (out >> 1) ^ -(out & 1)
-            shift += 7
-            if shift > 70:
-                raise ValueError("kafka: varint too long")
+class _VReader(WireCursor):
+    """Record cursor: zigzag varints and varint-framed nullable bytes."""
 
     def vbytes(self) -> "bytes | None":
         n = self.zigzag()
@@ -73,14 +48,19 @@ def _record_body(
     value: "bytes | None", headers: "list[tuple[str, bytes]]",
 ) -> bytes:
     body = bytearray(b"\x00")  # record attributes (unused by the spec)
-    body += _zz(ts_delta) + _zz(offset_delta)
+    body += write_zigzag(ts_delta) + write_zigzag(offset_delta)
     for blob in (key, value):
-        body += _zz(-1) if blob is None else _zz(len(blob)) + blob
-    body += _zz(len(headers))
+        body += (
+            write_zigzag(-1) if blob is None
+            else write_zigzag(len(blob)) + blob
+        )
+    body += write_zigzag(len(headers))
     for hk, hv in headers:
         kb = hk.encode("utf-8")
-        body += _zz(len(kb)) + kb
-        body += _zz(-1) if hv is None else _zz(len(hv)) + hv
+        body += write_zigzag(len(kb)) + kb
+        body += (
+            write_zigzag(-1) if hv is None else write_zigzag(len(hv)) + hv
+        )
     return bytes(body)
 
 
@@ -99,7 +79,7 @@ def encode_kafka_batch(
             i, r.get("ts_delta", 0), r.get("key"), r.get("value"),
             r.get("headers", []),
         )
-        recs += _zz(len(body)) + body
+        recs += write_zigzag(len(body)) + body
         max_delta = max(max_delta, r.get("ts_delta", 0))
     after_crc = (
         struct.pack(">hiq", 0, len(records) - 1, base_timestamp)

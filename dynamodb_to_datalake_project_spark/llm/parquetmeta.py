@@ -20,6 +20,12 @@ from __future__ import annotations
 
 import struct
 
+from dynamodb_to_datalake_project_spark.llm.wire import (
+    WireCursor,
+    read_uvarint,
+    unzigzag,
+)
+
 # thrift compact element types
 _CT_STOP = 0
 _CT_TRUE = 1
@@ -36,13 +42,9 @@ _CT_MAP = 11
 _CT_STRUCT = 12
 
 
-class _Reader:
+class _Reader(WireCursor):
     """Cursor over a thrift-compact buffer; every read bounds-checks
     and raises ValueError on truncation."""
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self.pos = pos
 
     def byte(self) -> int:
         if self.pos >= len(self.buf):
@@ -50,21 +52,6 @@ class _Reader:
         b = self.buf[self.pos]
         self.pos += 1
         return b
-
-    def varint(self) -> int:
-        out = shift = 0
-        while True:
-            b = self.byte()
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
-            if shift > 70:
-                raise ValueError("parquet: varint too long")
-
-    def zigzag(self) -> int:
-        v = self.varint()
-        return (v >> 1) ^ -(v & 1)
 
     def binary(self) -> bytes:
         n = self.varint()
@@ -231,6 +218,24 @@ def parse_parquet_footer(payload: bytes) -> dict:
         "row_groups": row_groups,
         "footer_bytes": flen,
     }
+
+
+def read_parquet_footer(path: str) -> dict:
+    """`parse_parquet_footer` of the file at `path` from its tail
+    alone — the footer, its length and the closing magic; data pages
+    are never read (a merge can stage GB-sized files). The leading
+    magic is not read either, so it is supplied."""
+    with open(path, "rb") as f:
+        size = f.seek(0, 2)
+        if size < 12:
+            raise ValueError("parquet: file too short for a footer")
+        f.seek(size - 8)
+        flen = int.from_bytes(f.read(4), "little")
+        if flen + 12 > size:
+            raise ValueError("parquet: footer length overruns the file")
+        f.seek(size - 8 - flen)
+        tail = f.read(flen + 8)
+    return parse_parquet_footer(b"PAR1" + tail)
 
 
 def parquet_audit_stats(docs):
@@ -864,19 +869,6 @@ def _inflate_page(blob: bytes, codec: int, want: int) -> bytes:
     return blob
 
 
-def _uvarint(data: bytes, at: int) -> "tuple[int, int]":
-    v = s = 0
-    while True:
-        if at >= len(data):
-            raise ValueError("parquet: truncated varint")
-        b = data[at]
-        at += 1
-        v |= (b & 0x7F) << s
-        if b < 0x80:
-            return v, at
-        s += 7
-
-
 def _delta_binary_packed(
     data: bytes, at: int, n: int
 ) -> "tuple[list[int], int]":
@@ -889,10 +881,10 @@ def _delta_binary_packed(
     values carry no data bytes. Returns (first n values, offset past
     the encoding) — the offset matters because DELTA_LENGTH/
     DELTA_BYTE_ARRAY embed this stream ahead of raw bytes."""
-    block, at = _uvarint(data, at)
-    nmini, at = _uvarint(data, at)
-    total, at = _uvarint(data, at)
-    uz, at = _uvarint(data, at)
+    block, at = read_uvarint(data, at)
+    nmini, at = read_uvarint(data, at)
+    total, at = read_uvarint(data, at)
+    uz, at = read_uvarint(data, at)
     if nmini == 0 or block % nmini or (block // nmini) % 8:
         raise ValueError("parquet: bad delta-binary-packed header")
     if total < n:
@@ -903,11 +895,11 @@ def _delta_binary_packed(
     if total == 0:
         return [], at
     per_mini = block // nmini
-    out = [(uz >> 1) ^ -(uz & 1)]
+    out = [unzigzag(uz)]
     remaining = total - 1
     while remaining > 0:
-        uz, at = _uvarint(data, at)
-        min_delta = (uz >> 1) ^ -(uz & 1)
+        uz, at = read_uvarint(data, at)
+        min_delta = unzigzag(uz)
         widths = data[at : at + nmini]
         if len(widths) != nmini:
             raise ValueError("parquet: truncated miniblock widths")

@@ -4,9 +4,11 @@ shard format, hand-rolled from the public specs with zero TF:
 - TFRecord framing: per record, little-endian u64 length + masked
   CRC32C of the length bytes + payload + masked CRC32C of the payload
   (mask = ((crc >> 15 | crc << 17) + 0xa282ead8) mod 2^32). CRC32C
-  (Castagnoli) is table-driven here — stdlib zlib.crc32 is the IEEE
-  polynomial and CANNOT verify these frames.
-- tf.train.Example: protobuf wire decode for the fixed public schema
+  (Castagnoli) is table-driven (`llm.wire.crc32c`, vectorized here
+  for batches) — stdlib zlib.crc32 is the IEEE polynomial and CANNOT
+  verify these frames.
+- tf.train.Example: protobuf wire decode (`llm.wire.pb_fields`) for
+  the fixed public schema
   Example{features: Features{feature: map<string, Feature>}} with
   Feature one of bytes_list/float_list/int64_list — varint/length-
   delimited wire types, packed and unpacked repeated int64/float.
@@ -20,21 +22,13 @@ from __future__ import annotations
 
 import struct
 
-_CRC32C_TABLE = []
-for _i in range(256):
-    _c = _i
-    for _ in range(8):
-        _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
-    _CRC32C_TABLE.append(_c)
-
-
-def crc32c(data: bytes, crc: int = 0) -> int:
-    """CRC-32C (Castagnoli, poly 0x1EDC6F41 reflected) — the checksum
-    TFRecord, Kafka v2 batches, and iSCSI use."""
-    crc ^= 0xFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC32C_TABLE[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
+from dynamodb_to_datalake_project_spark.llm.wire import (
+    CRC32C_TABLE,
+    crc32c,
+    pb_fields,
+    read_uvarint,
+    write_uvarint,
+)
 
 
 def _masked_crc(data: bytes) -> int:
@@ -54,7 +48,7 @@ def crc32c_batch(blobs: "list[bytes]") -> "list[int]":
     by_len: "dict[int, list[int]]" = {}
     for i, b in enumerate(blobs):
         by_len.setdefault(len(b), []).append(i)
-    tab = np.array(_CRC32C_TABLE, dtype=np.uint32)
+    tab = np.array(CRC32C_TABLE, dtype=np.uint32)
     for ln, idxs in by_len.items():
         if ln == 0:
             continue  # crc32c(b"") == 0 already
@@ -134,88 +128,12 @@ def parse_tfrecord(payload: bytes) -> "list[bytes]":
 # --- minimal protobuf wire codec (public encoding spec) ---------------
 
 
-#: single-byte varints (values 0..127 — tags, small lengths, small
-#: ints: the overwhelming majority of TFRecord varints) preencoded
-_PB_VARINT1 = [bytes((v,)) for v in range(0x80)]
-
-
-def _pb_varint(v: int) -> bytes:
-    if 0 <= v < 0x80:
-        return _PB_VARINT1[v]
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _pb_tag(field: int, wire: int) -> bytes:
-    return _pb_varint((field << 3) | wire)
+    return write_uvarint((field << 3) | wire)
 
 
 def _pb_len(field: int, body: bytes) -> bytes:
-    return _pb_tag(field, 2) + _pb_varint(len(body)) + body
-
-
-class _PbReader:
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-
-    def varint(self) -> int:
-        buf, pos = self.buf, self.pos
-        if pos < len(buf):  # 1-byte fast path
-            b = buf[pos]
-            if not b & 0x80:
-                self.pos = pos + 1
-                return b
-        out = shift = 0
-        while True:
-            if self.pos >= len(self.buf):
-                raise ValueError("protobuf: truncated varint")
-            b = self.buf[self.pos]
-            self.pos += 1
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
-            if shift > 70:
-                raise ValueError("protobuf: varint too long")
-
-    def fields(self):
-        """Yield (field_number, wire_type, value) over the buffer;
-        value is int for varint/fixed, bytes for length-delimited."""
-        while self.pos < len(self.buf):
-            tag = self.varint()
-            field, wire = tag >> 3, tag & 7
-            if wire == 0:
-                yield field, wire, self.varint()
-            elif wire == 2:
-                ln = self.varint()
-                if self.pos + ln > len(self.buf):
-                    raise ValueError("protobuf: truncated bytes field")
-                yield field, wire, self.buf[self.pos : self.pos + ln]
-                self.pos += ln
-            elif wire == 5:
-                if self.pos + 4 > len(self.buf):
-                    raise ValueError("protobuf: truncated fixed32")
-                (v,) = struct.unpack_from("<I", self.buf, self.pos)
-                self.pos += 4
-                yield field, wire, v
-            elif wire == 1:
-                if self.pos + 8 > len(self.buf):
-                    raise ValueError("protobuf: truncated fixed64")
-                (v,) = struct.unpack_from("<Q", self.buf, self.pos)
-                self.pos += 8
-                yield field, wire, v
-            else:
-                raise NotImplementedError(
-                    f"protobuf: wire type {wire} not implemented"
-                )
+    return _pb_tag(field, 2) + write_uvarint(len(body)) + body
 
 
 def encode_tf_example(features: "dict[str, object]") -> bytes:
@@ -231,7 +149,7 @@ def encode_tf_example(features: "dict[str, object]") -> bytes:
             isinstance(x, int) for x in value
         ):
             packed = b"".join(
-                _pb_varint(x & 0xFFFFFFFFFFFFFFFF) for x in value
+                write_uvarint(x & 0xFFFFFFFFFFFFFFFF) for x in value
             )
             kind = _pb_len(3, _pb_len(1, packed))  # int64_list packed
         elif isinstance(value, list) and all(
@@ -248,99 +166,26 @@ def encode_tf_example(features: "dict[str, object]") -> bytes:
     return _pb_len(1, bytes(feats))  # Example.features
 
 
-def _pb_walk(buf: bytes):
-    """(field, wire, value) triples of one message as a list — the
-    same walk `_PbReader.fields` yields, without per-level generator
-    and reader objects (the tf.Example parser visits 5 nested
-    messages per tiny record; object setup dominated the decode)."""
-    out = []
-    pos, n = 0, len(buf)
-    while pos < n:
-        tag = buf[pos]
-        if tag & 0x80:
-            tag = shift = 0
-            while True:
-                if pos >= n:
-                    raise ValueError("protobuf: truncated varint")
-                b = buf[pos]
-                pos += 1
-                tag |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    break
-                shift += 7
-                if shift > 70:
-                    raise ValueError("protobuf: varint too long")
-        else:
-            pos += 1
-        field, wire = tag >> 3, tag & 7
-        if wire == 0:
-            v = shift = 0
-            while True:
-                if pos >= n:
-                    raise ValueError("protobuf: truncated varint")
-                b = buf[pos]
-                pos += 1
-                v |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    break
-                shift += 7
-                if shift > 70:
-                    raise ValueError("protobuf: varint too long")
-            out.append((field, 0, v))
-        elif wire == 2:
-            ln = shift = 0
-            while True:
-                if pos >= n:
-                    raise ValueError("protobuf: truncated varint")
-                b = buf[pos]
-                pos += 1
-                ln |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    break
-                shift += 7
-                if shift > 70:
-                    raise ValueError("protobuf: varint too long")
-            if pos + ln > n:
-                raise ValueError("protobuf: truncated bytes field")
-            out.append((field, 2, buf[pos : pos + ln]))
-            pos += ln
-        elif wire == 5:
-            if pos + 4 > n:
-                raise ValueError("protobuf: truncated fixed32")
-            out.append((field, 5, struct.unpack_from("<I", buf, pos)[0]))
-            pos += 4
-        elif wire == 1:
-            if pos + 8 > n:
-                raise ValueError("protobuf: truncated fixed64")
-            out.append((field, 1, struct.unpack_from("<Q", buf, pos)[0]))
-            pos += 8
-        else:
-            raise NotImplementedError(
-                f"protobuf: wire type {wire} not implemented"
-            )
-    return out
-
-
 def parse_tf_example(payload: bytes) -> "dict[str, object]":
     """Decode a tf.train.Example back to {name: bytes | list[int] |
     list[float]} — handles packed AND unpacked repeated encodings
     (both are legal protobuf for the same schema)."""
     out: "dict[str, object]" = {}
-    for f1, w1, features in _pb_walk(payload):
+    for f1, w1, features in pb_fields(payload):
         if f1 != 1 or w1 != 2:
             raise ValueError("tf.Example: expected features field 1")
-        for fe, we, entry in _pb_walk(features):
+        for fe, we, entry in pb_fields(features):
             if fe != 1 or we != 2:
                 raise ValueError("tf.Example: expected feature map entry")
             name = None
             value: object = None
-            for fk, wk, v in _pb_walk(entry):
+            for fk, wk, v in pb_fields(entry):
                 if fk == 1 and wk == 2:
                     name = v.decode("utf-8")
                 elif fk == 2 and wk == 2:
-                    for kf, kw, kv in _pb_walk(v):
+                    for kf, kw, kv in pb_fields(v):
                         if kf == 1 and kw == 2:  # bytes_list
-                            for bf, bw, bv in _pb_walk(kv):
+                            for bf, bw, bv in pb_fields(kv):
                                 if bf != 1 or bw != 2:
                                     raise ValueError(
                                         "tf.Example: bad bytes_list"
@@ -348,11 +193,11 @@ def parse_tf_example(payload: bytes) -> "dict[str, object]":
                                 value = bv
                         elif kf == 3 and kw == 2:  # int64_list
                             vals: "list[int]" = []
-                            for lf, lw, lv in _pb_walk(kv):
+                            for lf, lw, lv in pb_fields(kv):
                                 if lf == 1 and lw == 2:  # packed
-                                    pr = _PbReader(lv)
-                                    while pr.pos < len(lv):
-                                        u = pr.varint()
+                                    pos = 0
+                                    while pos < len(lv):
+                                        u, pos = read_uvarint(lv, pos)
                                         vals.append(
                                             u - (1 << 64)
                                             if u >= 1 << 63 else u
@@ -369,7 +214,7 @@ def parse_tf_example(payload: bytes) -> "dict[str, object]":
                             value = vals
                         elif kf == 2 and kw == 2:  # float_list
                             fl: "list[float]" = []
-                            for lf, lw, lv in _pb_walk(kv):
+                            for lf, lw, lv in pb_fields(kv):
                                 if lf == 1 and lw == 2:  # packed
                                     if len(lv) % 4:
                                         raise ValueError(

@@ -370,6 +370,22 @@ def test_triangle_count_hand_built_graph(spark):
     assert triangle_count(star).count() == 0
 
 
+def test_triangle_count_float_and_string_ids(spark):
+    """Non-integral ids keep their values: a K4 on float ids 0.5-3.5
+    and on string ids returns each id with 3 triangles (the int64
+    broadcast kernel truncated floats to 0-3 and rejected strings)."""
+    from dynamodb_to_datalake_project_spark.graph import triangle_count
+
+    for ids, ddl in (
+        ([0.5, 1.5, 2.5, 3.5], "src double, dst double"),
+        (["a", "b", "c", "d"], "src string, dst string"),
+    ):
+        k4 = [(a, b) for i, a in enumerate(ids) for b in ids[i + 1 :]]
+        df = spark.createDataFrame(k4, ddl)
+        got = {r["node"]: r["n_triangles"] for r in triangle_count(df).collect()}
+        assert got == {i: 3 for i in ids}
+
+
 def test_clustering_coefficient_hand_built(spark):
     """K4 nodes have coefficient 1.0 (neighborhood is a clique); a
     path's interior node 0.0; the K4 node bridged to an outside

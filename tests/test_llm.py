@@ -846,6 +846,22 @@ def _mini_restart_jpeg(entropy: bytes) -> bytes:
     return bytes(out)
 
 
+def test_jpeg_huffman_cache_evicts_when_full():
+    """The DHT-keyed table cache stays bounded and keeps serving new
+    tables once full: the 257th distinct table is a cache hit on its
+    second use."""
+    bits = [0, 2] + [0] * 14  # two 2-bit codes
+    tables = [
+        multimodal._jpeg_huff_tables(bits, [i % 256, i // 256])
+        for i in range(257)
+    ]
+    assert len(multimodal._JPEG_HUFF_CACHE) <= 256
+    assert multimodal._jpeg_huff_tables(bits, [0, 1]) is tables[256]
+    lut, val, ln = tables[256]
+    assert lut == {(2, 0): 0, (2, 1): 1}
+    assert (val[0x3FFF], ln[0x3FFF], val[0x4000], ln[0x4000]) == (0, 2, 1, 2)
+
+
 def test_jpeg_restart_interval_decode_and_errors():
     """Restart-marker handling of the segment-based entropy decoder
     (r11): a DRI=1 stream decodes across RST0 with DC prediction
@@ -1220,7 +1236,7 @@ def test_flac_bit_primitives_match_references():
     regression gate for the codec rewrite."""
     import random
 
-    from dynamodb_to_datalake_project_spark.llm import flac
+    from dynamodb_to_datalake_project_spark.llm import flac, wire
 
     rng = random.Random(12)
 
@@ -1252,7 +1268,7 @@ def test_flac_bit_primitives_match_references():
             (rng.randrange(1 << n), n)
             for n in (rng.randrange(1, 24) for _ in range(rng.randrange(1, 60)))
         ]
-        w = flac._Writer()
+        w = wire.MsbWriter()
         ref_bits = []
         for v, n in fields:
             w.write(v, n)
@@ -1265,22 +1281,22 @@ def test_flac_bit_primitives_match_references():
             for i in range(0, len(ref_bits), 8)
         )
         assert bytes(w.out) == ref
-        r = flac._Reader(bytes(w.out))
+        r = wire.MsbReader(bytes(w.out))
         for v, n in fields:
             assert r.read(n) == v
     # unary scan across byte boundaries + truncation behavior
-    w = flac._Writer()
+    w = wire.MsbWriter()
     for q in (0, 1, 7, 8, 9, 30):
         w.unary(q)
     w.align()
-    r = flac._Reader(bytes(w.out))
+    r = wire.MsbReader(bytes(w.out))
     assert [r.unary() for _ in range(6)] == [0, 1, 7, 8, 9, 30]
     import pytest as _pt
 
     with _pt.raises(ValueError, match="truncated"):
-        flac._Reader(b"\x01").read(9)
+        wire.MsbReader(b"\x01").read(9)
     with _pt.raises(ValueError, match="truncated"):
-        flac._Reader(b"\x00").unary()
+        wire.MsbReader(b"\x00").unary()
 
 
 def test_ogg_crc_zlib_mapping_matches_reference():
@@ -5939,7 +5955,9 @@ def test_tfrecord_crc_and_example_roundtrip():
     from dynamodb_to_datalake_project_spark.llm.tfrecord import (
         _pb_len,
         _pb_tag,
-        _pb_varint,
+    )
+    from dynamodb_to_datalake_project_spark.llm.wire import (
+        write_uvarint as _pb_varint,
     )
 
     unpacked = _pb_tag(1, 0) + _pb_varint(7) + _pb_tag(1, 0) + _pb_varint(9)
